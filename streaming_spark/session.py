@@ -19,6 +19,10 @@ from pyspark.sql import SparkSession
 # batch keeps per-batch memory bounded while amortizing Arrow framing.
 DEFAULT_ARROW_BATCH = 65536
 
+# the directory holding the ``streaming_spark`` package: Python workers and
+# the worker daemon import the engine from it whatever the driver's cwd
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "streaming-spark",
@@ -30,7 +34,9 @@ def get_spark(
     ``cpus`` defaults to $SPARK_GRAFT_CPUS, then ``*``.  Shuffle
     partitions default to 32 (matched to local core count; on a real
     cluster this should scale with executor count — AQE coalesces the
-    excess at runtime).
+    excess at runtime).  Python workers fork from
+    ``streaming_spark.worker_daemon``, which removes a per-task zipimport
+    re-read (see that module).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", 32))
@@ -50,5 +56,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "streaming_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()
