@@ -30,6 +30,13 @@ twin:
   window frontier — watermark eviction is what keeps it O(windows in
   the lateness horizon), not O(N), which is the scale argument.
 
+Every arm's JSON line also carries the query's own state-store counters,
+read from ``q.recentProgress``: ``batches`` (micro-batches executed),
+``commit_ms_p50`` (per-batch median of ``commitTimeMs`` summed over the
+query's stateful operators) and ``state_stores`` (per-batch median of
+``numStateStoreInstances``), so a wall-clock finding can be checked
+against commit time × store count.
+
 Usage:
     PYTHONPATH=/root/repo python scripts/stress_streaming.py [max_n]
 """
@@ -40,6 +47,7 @@ import datetime as dt
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -135,6 +143,22 @@ def stage_events(spark, n: int, shards: int) -> tuple[str, str]:
     return stream_dir, t
 
 
+def progress_counters(q) -> dict:
+    """State-store counters of a finished query from its progress
+    records; triggers that ran no batch carry no ``addBatch`` time."""
+    ran = [p for p in q.recentProgress if "addBatch" in p["durationMs"]]
+    ops = [p.get("stateOperators") or [] for p in ran]
+    return {
+        "batches": len(ran),
+        "commit_ms_p50": statistics.median(
+            [sum(o["commitTimeMs"] for o in b) for b in ops] or [0]
+        ),
+        "state_stores": statistics.median(
+            [sum(o["numStateStoreInstances"] for o in b) for b in ops] or [0]
+        ),
+    }
+
+
 def _read_stream(spark, schema, stream_dir: str, files_per_trigger: int):
     return (
         spark.readStream.schema(schema)
@@ -163,7 +187,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
     # --- stateless per-batch partial rollup -------------------------
     sink = scratch.scratch_dir("ssink") + "/rollup"
     t0 = time.perf_counter()
-    _run_foreach_batch(
+    q = _run_foreach_batch(
         real(_read_stream(spark, schema, stream_dir, fpt)),
         lambda df, bid: _land_batch(
             df.groupBy("user_id").agg(
@@ -199,16 +223,15 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
         )
         .count()
     )
-    n_batches = spark.read.parquet(sink).select("__batch").distinct().count()
     print(
         json.dumps(
             {
                 "op": "stream_rollup_partials",
                 **tag,
                 "seconds": round(elapsed, 2),
-                "batches": n_batches,
                 "keys_out": keys_out,
                 "mismatch": int(bad),
+                **progress_counters(q),
             }
         ),
         flush=True,
@@ -219,7 +242,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
     for sp in parts_ab:
         sink = scratch.scratch_dir("ssink") + "/roll"
         t0 = time.perf_counter()
-        _run_foreach_batch(
+        q = _run_foreach_batch(
             stateful_rolling_mean(
                 real(_read_stream(spark, schema, stream_dir, fpt))
             ),
@@ -265,6 +288,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
                     "seconds": round(elapsed, 2),
                     "rows_out": rows_out,
                     "mismatch": int(bad),
+                    **progress_counters(q),
                 }
             ),
             flush=True,
@@ -321,7 +345,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
             )
         )
         t0 = time.perf_counter()
-        _run_foreach_batch(
+        q = _run_foreach_batch(
             left.join(right, cond, "inner"),
             lambda df, bid: _land_batch(df, bid, sink),
             "stress_join",
@@ -343,6 +367,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
                     "seconds": round(elapsed, 2),
                     "pairs_out": len(got_pairs),
                     "mismatch": len(got_pairs ^ twin_pairs),
+                    **progress_counters(q),
                 }
             ),
             flush=True,
@@ -356,7 +381,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
         .groupBy(F.window("ts", "1 hour"), (F.col("user_id") >= 0).alias("r"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    out = _run_until_watermark(
+    q = _run_until_watermark(
         agg,
         f"stress_win_{n}",
         dt.datetime.fromtimestamp(
@@ -366,7 +391,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
     )
     got = {
         (r["window"]["start"], r["cnt"])
-        for r in out.filter("r").collect()
+        for r in spark.table(q.name).filter("r").collect()
     }
     elapsed = time.perf_counter() - t0
     want = {
@@ -384,6 +409,7 @@ def run_point(spark, n: int, shards: int, timeout_s: int = 1200) -> None:
                 "seconds": round(elapsed, 2),
                 "windows": len(want),
                 "mismatch": len(got ^ want),
+                **progress_counters(q),
             }
         ),
         flush=True,

@@ -198,13 +198,18 @@ def verify_jaccard(
     """Exact Jaccard over shingle sets for candidate pairs only —
     JVM-side array ops, no Python.
 
+    Precondition: every ``sigs.shingles`` array holds DISTINCT values,
+    as ``minhash_signatures`` emits them (it np.unique's each document's
+    hashes).  Arrays with repeats give a wrong ratio, not an error; they
+    are not checked at run time, which would add work to the verify
+    plan of every dedup run.  Build ``sigs`` with ``minhash_signatures``
+    or apply ``array_distinct`` first.
+
     The union SIZE is derived, never materialized (r15, guide §1.2
-    step 2): shingle arrays are DISTINCT by construction
-    (``minhash_signatures`` np.unique's them), so |A∪B| = |A|+|B|−|A∩B|
-    exactly and ``array_union`` — which builds a hash set AND an
-    |A|+|B|-element output array per pair just to be counted — drops
-    out; the division takes the same two integers, so the ratio is
-    bit-identical."""
+    step 2): for distinct arrays |A∪B| = |A|+|B|−|A∩B| exactly, so
+    ``array_union`` — which builds a hash set AND an |A|+|B|-element
+    output array per pair just to be counted — drops out; the division
+    takes the same two integers, so the ratio is bit-identical."""
     sh = sigs.select("id", "shingles")
     a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))

@@ -532,7 +532,8 @@ def _run_until_watermark(
 ):
     """Run a streaming DF in append mode until the engine's event-time
     watermark has PASSED ``min_watermark`` (a datetime) in a committed
-    batch, then stop and return the sink table.
+    batch, then stop and return the stopped query: its memory sink is
+    the table ``q.name`` and ``q.recentProgress`` holds its progress.
 
     Why not availableNow: watermark-gated output (outer-join nulls,
     evicted sessions) emits in the batch AFTER the one that ingested the
@@ -590,7 +591,7 @@ def _run_until_watermark(
     finally:
         restore()
     q.awaitTermination(60)
-    return df.sparkSession.table(sink_name)
+    return q
 
 
 def _run_foreach_batch(
@@ -608,7 +609,8 @@ def _run_foreach_batch(
     single owner: ``awaitTermination`` re-raises the query's own
     failure; the timeout only fires when the query is genuinely stuck,
     and stops it before raising so the session is not left holding a
-    zombie stream."""
+    zombie stream.  Returns the finished query (``q.recentProgress``
+    holds each micro-batch's progress)."""
     restore = _stream_conf(stream_df.sparkSession, state_partitions)
     try:
         q = (
@@ -622,6 +624,7 @@ def _run_foreach_batch(
             raise TimeoutError(f"{label} did not finish within {timeout_s}s")
     finally:
         restore()
+    return q
 
 
 def _land_batch(df, batch_id, sink_dir: str) -> None:
@@ -972,13 +975,13 @@ def q_streaming_join_outer(spark, sf_dir):
     # max_ts + 30min; the sentinels sit at max_ts + 4h, leaving the
     # final global watermark at max_ts + 2h (sentinel minus the 2h
     # purchase budget) — aim between the two.
-    sink = _run_until_watermark(
+    q = _run_until_watermark(
         joined,
         "q_streaming_join_outer_sink",
         _max_event_ts(sf_dir) + _dt.timedelta(hours=1),
         state_partitions=2,
     )
-    return sink.filter(F.col("user_id") >= 0)
+    return spark.table(q.name).filter(F.col("user_id") >= 0)
 
 
 @query(

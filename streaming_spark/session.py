@@ -5,7 +5,9 @@ cluster: AQE on (runtime re-planning, skew-join handling), Arrow
 exchange on (the engine's core operator is Arrow-batch streaming, the
 Spark analog of the reference's per-chunk columnar exchange —
 reference FeatherInterface.cpp:254-355), UTC session timezone for
-deterministic timestamp semantics across engines.
+deterministic timestamp semantics across engines, and streaming checkpoints
+(state-store deltas, offset and commit logs) written through Hadoop's
+FileSystem API rather than FileContext.
 """
 
 from __future__ import annotations
@@ -23,6 +25,11 @@ DEFAULT_ARROW_BATCH = 65536
 # the worker daemon import the engine from it whatever the driver's cwd
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(
     app_name: str = "streaming-spark",
@@ -37,6 +44,17 @@ def get_spark(
     excess at runtime).  Python workers fork from
     ``streaming_spark.worker_daemon``, which removes a per-task zipimport
     re-read (see that module).
+
+    Streaming checkpoints go through Spark's
+    ``FileSystemBasedCheckpointFileManager``.  The default
+    FileContext-based manager renames on ``file:`` paths through
+    ``AbstractFileSystem.renameInternal``, which forks a ``readlink``
+    child for every link-status probe (several per file and per
+    ``.crc``): ~0.4 s of ``commitTimeMs`` per micro-batch over four
+    state stores, against ~30 ms here.  On local paths both managers
+    are check-then-``rename(2)``, so atomicity is unchanged; on
+    ``hdfs://`` only the FileContext manager renames atomically without
+    overwrite.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle = int(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", 32))
@@ -58,5 +76,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "streaming_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_MANAGER)
     )
     return builder.getOrCreate()

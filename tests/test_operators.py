@@ -104,6 +104,25 @@ def test_verify_jaccard_derived_union_identity(spark):
     assert kept == {(1, 2)}
 
 
+def test_minhash_signatures_emit_distinct_shingles(spark):
+    """verify_jaccard's precondition: every shingle array
+    minhash_signatures emits is duplicate-free, also for text whose
+    k-grams repeat."""
+    from streaming_spark.operators.dedup import minhash_signatures
+
+    docs = spark.createDataFrame(
+        [(0, "abcabcabcabcabcabc"), (1, "aaaaaaaaaaaa"), (2, "ab"), (3, BASE)],
+        "doc_id BIGINT, text STRING",
+    )
+    rows = minhash_signatures(docs, "text", "doc_id", shingle_k=3).collect()
+    assert len(rows) == 4
+    for r in rows:
+        assert len(r.shingles) == len(set(r.shingles)), r.id
+    # the repetitive docs really had repeated k-grams to drop
+    sizes = {r.id: len(r.shingles) for r in rows}
+    assert sizes[0] == 3 and sizes[1] == 1
+
+
 def test_simhash_finds_planted_near_dup(spark):
     docs = _docs_df(spark)
     pairs = simhash_dedup_pairs(docs, "text", "doc_id", max_hamming=10).collect()
